@@ -3,7 +3,24 @@
 Local-mode defaults mirror what a 1000-executor cluster deployment would
 set per-executor: AQE on (runtime coalescing + skew-join splitting),
 shuffle width sized to cores, Arrow enabled for the pandas-UDF slow path,
-UTC session timezone so results are comparable across engines.
+UTC session timezone so results are comparable across engines, and a
+driver heap sized to the host (min(48g, 60% of physical RAM)).
+
+Generated-class cache: Spark keeps the classes whole-stage codegen
+compiles in an LRU cache of ``spark.sql.codegen.cache.maxEntries``
+entries (Spark's default: 100). One pass of the eight dedup/similarity
+queries needs about 196 classes, so at 100 every warm pass recompiled
+about 210 of them (0.75-0.93 s of Janino time at sf0.1). Run once over
+the whole registry at sf0.01 with an unbounded cache, the engine
+compiles 1311 distinct classes. The default,
+``CODEGEN_CACHE_ENTRIES`` = 4000, holds that working set three times over. The
+stage id is also left out of generated class names
+(``spark.sql.codegen.useIdInClassName=false``), so two pipelines that
+differ only in their stage number, whether in two queries or in two
+adaptive re-plans of one, share a class. The cache costs metaspace for
+the classes it keeps alive: after that registry pass the JVM's ``Metaspace``
+pool peaked at 211 MB, against 77 MB when the session started (all
+classes loaded, Spark's own included).
 """
 
 from __future__ import annotations
@@ -11,6 +28,22 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Entries of Spark's generated-class cache; see the module docstring
+# for the measured working set it is sized to.
+CODEGEN_CACHE_ENTRIES = 4000
+
+
+def default_driver_memory() -> str:
+    """$SPARK_DRIVER_MEMORY, else min(48g, 60% of physical RAM)."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError):  # no sysconf: keep the cluster default
+        return "48g"
+    return f"{min(48 * 1024, int(ram * 0.6) >> 20)}m"
 
 
 def get_spark(
@@ -25,6 +58,12 @@ def get_spark(
     partitions default to the core count: at 100 TB on a real cluster
     this knob is instead sized so each shuffle partition stays in the
     100-500 MB range (AQE coalescing handles the long tail either way).
+    ``extra_conf`` overrides any default here.
+
+    The generated-class cache is static and JVM-global: it is sized
+    from ``spark.sql.codegen.cache.maxEntries`` when the JVM's first
+    session is created, and ``getOrCreate`` on an existing session
+    keeps that session's size whatever is passed now.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -40,7 +79,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Read parquet TIMESTAMP(NANOS) columns as long (queries.t()
@@ -49,6 +88,8 @@ def get_spark(
         # read never flips legacy flags on an embedder's shared session
         # (VERDICT r11 nit #2).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     # Opt-in JVM Avro codec (spark-avro is not bundled with pyspark):
     # set SPARK_GRAFT_AVRO_JARS=1 to pull the package so from_avro/

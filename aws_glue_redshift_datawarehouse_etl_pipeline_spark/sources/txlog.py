@@ -1435,25 +1435,61 @@ class TxTable:
     def _write_head_hint(self, version: int) -> None:
         """Best-effort O(1) head pointer (the public formats'
         `_last_checkpoint` pattern): written AFTER the exclusive-create
-        claim succeeds, overwritten non-atomically. A stale, torn, or
-        race-clobbered hint can only UNDERSTATE the head (the reader
-        probes forward) or point at a vacuumed version (the reader
-        falls back to the full listing) — correctness never depends on
-        it, so failures are swallowed."""
+        claim succeeds, to a temp file that is then renamed over the
+        hint, so a reader sees the old hint or the new one, never a
+        torn one. Local tables take the same plain-file fast path as
+        ``_try_write_manifest`` (write + ``os.replace``, no ``.crc``
+        sidecar); other filesystems use Hadoop ``create`` + ``rename``,
+        deleting the old hint first where rename does not overwrite.
+        A stale or race-clobbered hint can only UNDERSTATE the head
+        (the reader probes forward) or point at a vacuumed version (the
+        reader falls back to the full listing) — correctness never
+        depends on it, so failures are swallowed."""
+        tmp_name = f"{_HEAD_HINT}.{uuid.uuid4().hex}.tmp"
+        payload = str(version).encode("utf-8")
+        local_dir = self._local_log_dir()
+        if local_dir is not None:
+            tmp = os.path.join(local_dir, tmp_name)
+            try:
+                with open(tmp, "wb") as fh:
+                    fh.write(payload)
+                os.replace(tmp, os.path.join(local_dir, _HEAD_HINT))
+                # a hint once written through Hadoop left a checksum
+                # sidecar that no longer matches the renamed file
+                crc = os.path.join(local_dir, f".{_HEAD_HINT}.crc")
+                if os.path.exists(crc):
+                    os.remove(crc)
+            except OSError:  # hints are advisory
+                try:
+                    os.remove(tmp)
+                except OSError:
+                    pass
+            return
         try:
             fs, _ = _fs_and_path(self.spark, self.root)
-            jvm = self.spark._jvm
-            out = fs.create(
-                jvm.org.apache.hadoop.fs.Path(self._log_path(), _HEAD_HINT), True
-            )
+            P = self.spark._jvm.org.apache.hadoop.fs.Path
+            tmp = P(self._log_path(), tmp_name)
+            dst = P(self._log_path(), _HEAD_HINT)
+            out = fs.create(tmp, True)
             try:
-                out.write(bytearray(str(version).encode("utf-8")))
+                out.write(bytearray(payload))
             finally:
                 out.close()
+            if not fs.rename(tmp, dst):
+                fs.delete(dst, False)
+                if not fs.rename(tmp, dst):
+                    fs.delete(tmp, False)
         except Exception:  # noqa: BLE001 — hints are advisory
             pass
 
     def _read_head_hint(self) -> int | None:
+        local_dir = self._local_log_dir()
+        if local_dir is not None:
+            try:
+                with open(os.path.join(local_dir, _HEAD_HINT), "rb") as fh:
+                    return int(fh.read().strip())
+            except (OSError, ValueError):  # absent or unreadable = no hint
+                return None
         try:
             fs, _ = _fs_and_path(self.spark, self.root)
             jvm = self.spark._jvm

@@ -26,6 +26,10 @@ import duckdb
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from aws_glue_redshift_datawarehouse_etl_pipeline_spark.session import (  # noqa: E402
+    CODEGEN_CACHE_ENTRIES,
+)
+
 TABLES = [
     "region",
     "nation",
@@ -120,6 +124,8 @@ def main() -> int:
         # session that reads a TIMESTAMP(NANOS) events layout must
         # carry the flag itself
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -53,7 +53,9 @@ import duckdb
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions","8")
          .config("spark.sql.session.timeZone","UTC")
-         .config("spark.ui.enabled","false").getOrCreate())
+         .config("spark.ui.enabled","false")
+         .config("spark.sql.codegen.cache.maxEntries","4000")
+         .config("spark.sql.codegen.useIdInClassName","false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 t1 = len(e.entry(spark).collect())
 print("t1 rows:", t1)

@@ -5,7 +5,11 @@ between every run; pass order alternates (forward/reverse) each pass so a
 load ramp hits every query from both sides. Reports every pass timing plus
 the warm median (passes 2..N — pass 1 carries whole-stage-codegen JIT) and
 the host 1-minute loadavg sampled before each pass, so the artifact itself
-shows whether the window was calm.
+shows whether the window was calm. Each pass also records how many
+classes Spark's code generator compiled and the Janino milliseconds they
+took (``CodegenMetrics`` / ``CodeGenerator.compileTime``): a warm pass
+should compile next to nothing, so a generated-class cache too small for
+the working set shows up as compiles on every pass.
 
 This is the protocol VERDICT r12/r13 used ad hoc for per-query
 adjudication ("6 isolated runs, clearCache between, both probe orders");
@@ -16,7 +20,9 @@ round 14 makes it reproducible:
 
 Output: ONE JSON line
     {"probe": {...per-query pass timings...},
-     "warm_median": {...}, "loadavg": [...], "sf_dir": ...}
+     "warm_median": {...}, "loadavg": [...],
+     "codegen_compiles": [...per pass...], "codegen_compile_ms": [...],
+     "sf_dir": ...}
 """
 
 from __future__ import annotations
@@ -33,6 +39,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from aws_glue_redshift_datawarehouse_etl_pipeline_spark import queries as q
 from aws_glue_redshift_datawarehouse_etl_pipeline_spark.session import get_spark
 from bench import read_proc_stat, steal_fraction
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile milliseconds) so far in this JVM:
+    the count of Spark's ``CodegenMetrics`` compilation-time histogram
+    and ``CodeGenerator.compileTime`` (summed nanoseconds). Both are
+    JVM-global, and a cache hit adds to neither."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return int(hist.getCount()), gen.compileTime() / 1e6
 
 
 def main() -> None:
@@ -58,6 +75,7 @@ def main() -> None:
     errors: dict[str, list[str]] = {}
     loadavgs: list[float] = []
     snaps: list = []
+    codegen: list[tuple[int, float]] = []
     # per-query isolation + stop-in-finally (ADVICE r14): one failing
     # query mid-probe must not abort the run and lose every prior pass
     # timing — the error is recorded per pass and the partial JSON is
@@ -66,6 +84,7 @@ def main() -> None:
         for pass_no in range(args.runs):
             loadavgs.append(round(os.getloadavg()[0], 2))
             snaps.append(read_proc_stat())
+            codegen.append(codegen_counters(spark))
             order = names if pass_no % 2 == 0 else list(reversed(names))
             for name in order:
                 spark.catalog.clearCache()
@@ -80,6 +99,7 @@ def main() -> None:
                         f"pass {pass_no + 1}: "
                         f"{type(exc).__name__}: {exc}"[:500])
         snaps.append(read_proc_stat())
+        codegen.append(codegen_counters(spark))
     finally:
         spark.stop()
     # per-pass hypervisor steal — the contention signal loadavg can't
@@ -97,6 +117,12 @@ def main() -> None:
         "loadavg": loadavgs,
         "pass_steal_pct": [
             round(s, 4) if s is not None else None for s in pass_steal
+        ],
+        "codegen_compiles": [
+            b[0] - a[0] for a, b in zip(codegen, codegen[1:])
+        ],
+        "codegen_compile_ms": [
+            round(b[1] - a[1], 1) for a, b in zip(codegen, codegen[1:])
         ],
         "sf_dir": args.sf_dir,
     }

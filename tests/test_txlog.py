@@ -1220,6 +1220,17 @@ def test_head_hint_written_and_used(spark, root):
     assert t.current_version() == 1
 
 
+def test_head_hint_replaced_atomically_leaves_no_temp_files(spark, root):
+    t = TxTable(spark, root)
+    for i in range(3):
+        t.append(_docs(spark, range(i * 2, i * 2 + 2)))
+    log = os.path.join(root, "_txlog")
+    assert not [n for n in os.listdir(log) if n.endswith(".tmp")]
+    assert not os.path.exists(os.path.join(log, "._head_hint.crc"))
+    with open(os.path.join(log, "_head_hint")) as fh:
+        assert int(fh.read()) == t.current_version() == 2
+
+
 def test_stale_or_corrupt_head_hint_never_breaks_reads(spark, root):
     """The hint is ADVISORY: understating it costs probe-forward reads,
     corrupting or deleting it falls back to the listing — the head is

@@ -1,7 +1,8 @@
 """Unit tests for scripts/warm_probe.py's failure isolation (ADVICE
 r14): one failing query mid-probe must not abort the run or lose prior
-pass timings, and the SparkSession must stop even when a pass raises.
-Uses fake sessions/queries — no SparkSession, runs in milliseconds."""
+pass timings, and the SparkSession must stop even when a pass raises;
+and its per-pass codegen counters. Uses fake sessions/queries — no
+SparkSession, runs in milliseconds."""
 
 from __future__ import annotations
 
@@ -23,9 +24,38 @@ wp = importlib.util.module_from_spec(_spec)
 _spec.loader.exec_module(wp)
 
 
+class _FakeCodegen:
+    """The JVM's generated-class cache and its counters: a key compiles
+    (one count, 2.5 ms) unless the cache still holds it. ``keep=False``
+    is a cache too small for the working set — every run recompiles."""
+
+    def __init__(self, keep: bool = True):
+        self.keep = keep
+        self.cached: set[str] = set()
+        self.count = 0
+        self.nanos = 0
+
+    def compile(self, key: str) -> None:
+        if key in self.cached:
+            return
+        if self.keep:
+            self.cached.add(key)
+        self.count += 1
+        self.nanos += 2_500_000
+
+    def jvm(self):
+        ns = types.SimpleNamespace
+        hist = ns(getCount=lambda: self.count)
+        metrics = ns(source=ns(CodegenMetrics=ns(METRIC_COMPILATION_TIME=lambda: hist)))
+        gen = ns(CodeGenerator=ns(compileTime=lambda: self.nanos))
+        sql = ns(catalyst=ns(expressions=ns(codegen=gen)))
+        return ns(org=ns(apache=ns(spark=ns(metrics=metrics, sql=sql))))
+
+
 class _FakeWriter:
-    def __init__(self, fail: bool):
+    def __init__(self, fail: bool, compile_key):
         self._fail = fail
+        self._compile_key = compile_key
 
     def format(self, _fmt):
         return self
@@ -36,24 +66,32 @@ class _FakeWriter:
     def save(self):
         if self._fail:
             raise RuntimeError("boom")
+        if self._compile_key is not None:
+            self._compile_key()
 
 
 class _FakeFrame:
-    def __init__(self, fail: bool):
-        self.write = _FakeWriter(fail)
+    def __init__(self, fail: bool, spark=None, key: str | None = None):
+        compile_key = None
+        if spark is not None:
+            def compile_key():
+                spark.codegen.compile(key)
+        self.write = _FakeWriter(fail, compile_key)
 
 
 class _FakeSpark:
-    def __init__(self):
+    def __init__(self, codegen: _FakeCodegen | None = None):
         self.stopped = False
         self.catalog = types.SimpleNamespace(clearCache=lambda: None)
+        self.codegen = codegen or _FakeCodegen()
+        self._jvm = self.codegen.jvm()
 
     def stop(self):
         self.stopped = True
 
 
-def _run_probe(monkeypatch, capsys, queries, argv_queries, runs=3):
-    fake = _FakeSpark()
+def _run_probe(monkeypatch, capsys, queries, argv_queries, runs=3, codegen=None):
+    fake = _FakeSpark(codegen)
     monkeypatch.setattr(wp, "get_spark", lambda **_kw: fake)
     monkeypatch.setattr(
         wp, "q", types.SimpleNamespace(register_all=lambda: None, QUERIES=queries)
@@ -113,3 +151,25 @@ def test_all_clean_probe_has_no_errors_key(monkeypatch, capsys):
     _fake, out = _run_probe(monkeypatch, capsys, queries, "ok", runs=2)
     assert "errors" not in out
     assert len(out["probe"]["ok"]) == 2
+
+
+def _compiling(name: str, fail: bool = False):
+    return lambda s, _d: _FakeFrame(fail=fail, spark=s, key=name)
+
+
+def test_codegen_compiles_reported_per_pass(monkeypatch, capsys):
+    # a cache that holds the working set: only the first pass compiles,
+    # and a query that fails before its action compiles nothing
+    queries = {"a": _compiling("a"), "b": _compiling("b"),
+               "bad": _compiling("bad", fail=True)}
+    _fake, out = _run_probe(monkeypatch, capsys, queries, "a,b,bad", runs=3)
+    assert out["codegen_compiles"] == [2, 0, 0]
+    assert out["codegen_compile_ms"] == [5.0, 0.0, 0.0]
+
+
+def test_thrashing_codegen_cache_shows_on_every_pass(monkeypatch, capsys):
+    queries = {"a": _compiling("a"), "b": _compiling("b")}
+    _fake, out = _run_probe(monkeypatch, capsys, queries, "a,b", runs=3,
+                            codegen=_FakeCodegen(keep=False))
+    assert out["codegen_compiles"] == [2, 2, 2]
+    assert out["codegen_compile_ms"] == [5.0, 5.0, 5.0]
